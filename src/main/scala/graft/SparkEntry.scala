@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ast.CorrelateStmt
 import graft.exec.{CorrelateExec, QueryExec, SelectExec}
 import graft.ingest.Merge
-import graft.ml.{Ann, Multimodal, NearDup}
+import graft.ml.{Ann, IvfCodec, Multimodal, NearDup}
 import graft.model.{Catalog, Tables}
 import graft.operators.{PostingAlgebra, TimeSeriesOps}
 import graft.operators.PostingAlgebra._
@@ -1357,9 +1357,11 @@ object SparkEntry {
     // inconsistent hybrid fusions...
     "ann_masked_serve" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.Ann.ivfTopKMaskedFrom(Catalog.ivfFlat(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")), 10)
+      IvfCodec.Flat.topK(IvfCodec.restrict(
+          Catalog.ivfStore(s, dir, IvfCodec.Flat),
+          tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")),
+          masked = true),
+        Catalog.embeddings(s, dir), 0L, 10)
     }),
     // ...and its compaction end: tombstones folded OUT of the flat store
     // into a new sorted generation behind the atomic MANIFEST flip, served
@@ -1367,7 +1369,8 @@ object SparkEntry {
     // exactly — AnnIndexSpec pins it)
     "ann_tombstone_compact" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.Ann.ivfTombstoneCompactServe(s, Catalog.ivfFlat(s, dir),
+      graft.ml.Ann.ivfTombstoneCompactServe(s,
+        Catalog.ivfStore(s, dir, IvfCodec.Flat),
         Catalog.embeddings(s, dir), 0L,
         tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")),
         Catalog.scratch(dir, "ann_tombstone_compact"), 10)
@@ -1380,7 +1383,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.col
       graft.ml.Retrieval.rrfStoredMasked(Catalog.lexIndex(s, dir),
         Catalog.lexStatsFolded(s, dir), Catalog.embeddings(s, dir),
-        Catalog.ivfFlat(s, dir),
+        Catalog.ivfStore(s, dir, IvfCodec.Flat),
         tombstoneLosers(s, dir),
         Seq("stream", "table", "scan"), 0L, 20, 10)
     }),
@@ -1389,7 +1392,7 @@ object SparkEntry {
     // filtered-search shape every deployed retrieval stack exposes
     "rrf_stored_filtered" -> ((s, dir) =>
       graft.ml.Retrieval.rrfStoredFiltered(Catalog.lexIndex(s, dir),
-        Catalog.docMeta(s, dir), Catalog.ivfFlat(s, dir),
+        Catalog.docMeta(s, dir), Catalog.ivfStore(s, dir, IvfCodec.Flat),
         Catalog.embeddings(s, dir), Seq("merge", "stream", "window"),
         0L, "en", 20, 10, Some(Catalog.metaStatsFolded(s, dir, "en")))),
     // the serving lattice's last single-query cell: slice AND tombstone
@@ -1397,7 +1400,7 @@ object SparkEntry {
     // pre-delete scoring, no deleted doc from either side
     "rrf_stored_filtered_masked" -> ((s, dir) =>
       graft.ml.Retrieval.rrfStoredFilteredMasked(Catalog.lexIndex(s, dir),
-        Catalog.docMeta(s, dir), Catalog.ivfFlat(s, dir),
+        Catalog.docMeta(s, dir), Catalog.ivfStore(s, dir, IvfCodec.Flat),
         Catalog.embeddings(s, dir), tombstoneLosers(s, dir),
         Seq("merge", "stream", "window"), 0L, "en", 20, 10,
         Some(Catalog.metaStatsFolded(s, dir, "en")))),
@@ -1413,7 +1416,8 @@ object SparkEntry {
     "rrf_stored" -> ((s, dir) =>
       graft.ml.Retrieval.rrfStored(Catalog.lexIndex(s, dir),
         Catalog.lexStatsFolded(s, dir), Catalog.embeddings(s, dir),
-        Catalog.ivfFlat(s, dir), Seq("merge", "stream", "window"),
+        Catalog.ivfStore(s, dir, IvfCodec.Flat),
+        Seq("merge", "stream", "window"),
         0L, 20, 10)),
     // the batched stored hybrid: both tiers' batch plans + per-query
     // fusion in ONE plan — the full hybrid serving matrix closed
@@ -1421,7 +1425,7 @@ object SparkEntry {
       import s.implicits._
       import org.apache.spark.sql.functions.col
       graft.ml.Retrieval.rrfStoredBatch(Catalog.lexIndex(s, dir),
-        Catalog.lexStatsFolded(s, dir), Catalog.ivfFlat(s, dir),
+        Catalog.lexStatsFolded(s, dir), Catalog.ivfStore(s, dir, IvfCodec.Flat),
         BatchQueries.toDF("qid", "terms"),
         Catalog.embeddings(s, dir).filter(col("vec_id") < BatchMaxQid),
         20, 10, termDict = BatchTermDict)
@@ -1433,7 +1437,7 @@ object SparkEntry {
       import s.implicits._
       import org.apache.spark.sql.functions.col
       graft.ml.Retrieval.rrfStoredFilteredBatch(Catalog.lexIndex(s, dir),
-        Catalog.docMeta(s, dir), Catalog.ivfFlat(s, dir),
+        Catalog.docMeta(s, dir), Catalog.ivfStore(s, dir, IvfCodec.Flat),
         BatchQueries.toDF("qid", "terms"),
         Catalog.embeddings(s, dir).filter(col("vec_id") < BatchMaxQid),
         "en", 20, 10, termDict = BatchTermDict,
@@ -1608,7 +1612,7 @@ object SparkEntry {
     // SQ8 composed-store upkeep: new embeddings encode through the FROZEN
     // quantizer (the store's shipped mn/scale constants) AND assign their
     // IVF cell in one stateless projection — the streamed twin of
-    // Catalog.sq8IvfStore; exploded to scalar (vec_id, cell, pos, code)
+    // the SQ8 ivfStore; exploded to scalar (vec_id, cell, pos, code)
     // so the oracle pins the byte codes element-wise
     "sq8_stream_index" -> ((s, dir) =>
       explodeCodes(graft.streaming.EmbeddingsIngest.sq8Once(s, dir))),
@@ -1639,18 +1643,19 @@ object SparkEntry {
     // BUILD (like every *_compact entry); the lookup itself is the pinned
     // cell-pruned plan.
     "sq8_topk_gen" -> ((s, dir) =>
-      graft.ml.Quant.sq8IvfTopKFrom(
+      IvfCodec.Sq8.topK(
         graft.streaming.EmbeddingsIngest.sq8GenServing(s, dir,
           Catalog.scratch(dir, "sq8_topk_gen")),
         Catalog.embeddings(s, dir), 0, 10)),
     // every IVF-float lookup below serves from the IVF-FLAT store
-    // (Catalog.ivfFlat — vectors stored INSIDE the cell layout, the float
-    // twin of sq8IvfStore): the probed partitions' floats are read
-    // directly, so the former assignment-table ⋈ embeddings corpus join is
-    // gone from the serving plans (VERDICT r14 #5 job audit)
+    // (Catalog.ivfStore of IvfCodec.Flat — vectors stored INSIDE the cell
+    // layout, the float twin of the coded stores): the probed partitions'
+    // floats are read directly, so the former assignment-table ⋈
+    // embeddings corpus join is gone from the serving plans (VERDICT r14
+    // #5 job audit)
     "emb_topk_ivf" -> ((s, dir) =>
-      Ann.ivfTopKFrom(Catalog.ivfFlat(s, dir), Catalog.embeddings(s, dir),
-        0, 10)),
+      IvfCodec.Flat.topK(Catalog.ivfStore(s, dir, IvfCodec.Flat),
+        Catalog.embeddings(s, dir), 0, 10)),
     // index-health audit: per-cell population + load factor from the
     // STORED assignment (hot cell = probe becomes a scan; empty cell =
     // wasted centroid — the IVF rebalance trigger)
@@ -1673,23 +1678,27 @@ object SparkEntry {
     // the predicate reaches the flat store's parquet scan as a pushed
     // EqualTo beside the partition pruning; probe stage identical
     "emb_topk_filtered" -> ((s, dir) =>
-      Ann.ivfTopKFilteredFrom(Catalog.ivfFlat(s, dir),
-        Catalog.embeddings(s, dir), 0, 3, 10)),
+      IvfCodec.Flat.topK(
+        Catalog.ivfStore(s, dir, IvfCodec.Flat).filter(col("label") === 3),
+        Catalog.embeddings(s, dir), 0, 10)),
     // BATCHED IVF serving: a whole query table answered in ONE plan —
     // probe assignment, candidate join and per-query top-k all declarative,
     // zero per-query driver round-trips (the 100 TB serving shape; the
     // single-query entries above are the point-lookup shape)
     "emb_topk_ivf_batch" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      Ann.ivfTopKBatchFrom(Catalog.ivfFlat(s, dir),
-        Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
+      IvfCodec.Flat.topKBatch(Catalog.ivfStore(s, dir, IvfCodec.Flat),
+        Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10,
+        excludeSelf = true, keepRank = false)
     }),
     // the serving matrix's fourth corner: batched AND metadata-filtered —
     // same batch plan, label predicate pushed into the flat-store scan
     "emb_topk_filtered_batch" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      Ann.ivfTopKBatchFilteredFrom(Catalog.ivfFlat(s, dir),
-        Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 3, 10)
+      IvfCodec.Flat.topKBatch(
+        Catalog.ivfStore(s, dir, IvfCodec.Flat).filter(col("label") === 3),
+        Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10,
+        excludeSelf = true, keepRank = false)
     }),
     // scalar int8 quantization COMPOSED with the coarse quantizer: the 4x-
     // smaller byte codes live inside the MATERIALIZED cell-partitioned
@@ -1699,7 +1708,7 @@ object SparkEntry {
     // scan (VERDICT r10 #1); QuantSpec bounds the ranking cost and pins
     // the pruned plan
     "emb_topk_sq8" -> ((s, dir) =>
-      graft.ml.Quant.sq8IvfTopKFrom(Catalog.sq8IvfStore(s, dir),
+      IvfCodec.Sq8.topK(Catalog.ivfStore(s, dir, IvfCodec.Sq8),
         Catalog.embeddings(s, dir), 0, 10)),
     // filtered + masked serving at the QUANTIZED tiers (r16): the sidecar
     // slice / tombstone set composes with the composed stores exactly as
@@ -1721,7 +1730,8 @@ object SparkEntry {
         .select(col("doc_a").as("qid"), col("doc_b").as("vec_id"))
         .unionByName(pairs
           .select(col("doc_b").as("qid"), col("doc_a").as("vec_id")))
-      Ann.hardNegatives(Catalog.ivfFlat(s, dir), queries, pos, 10,
+      Ann.hardNegatives(Catalog.ivfStore(s, dir, IvfCodec.Flat), queries,
+        pos, 10,
         excludeTopM = 1)
     }),
     // ADAPTIVE probe widening: when the slice thins the probed candidates
@@ -1731,36 +1741,43 @@ object SparkEntry {
     // exercises the escalation at verify scale
     "emb_topk_adaptive" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.Ann.ivfTopKAllowedAdaptive(Catalog.ivfFlat(s, dir),
+      graft.ml.Ann.ivfTopKAllowedAdaptive(
+        Catalog.ivfStore(s, dir, IvfCodec.Flat),
         Catalog.embeddings(s, dir), 0L,
         Catalog.docMeta(s, dir).filter(col("lang") === "fr")
           .select(col("doc_id").as("vec_id")), 20)
     }),
     "sq8_topk_filtered" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.Quant.sq8IvfTopKAllowed(Catalog.sq8IvfStore(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        Catalog.docMeta(s, dir).filter(col("lang") === "en")
-          .select(col("doc_id").as("vec_id")), 10)
+      IvfCodec.Sq8.topK(IvfCodec.restrict(
+          Catalog.ivfStore(s, dir, IvfCodec.Sq8),
+          Catalog.docMeta(s, dir).filter(col("lang") === "en")
+            .select(col("doc_id").as("vec_id")), masked = false),
+        Catalog.embeddings(s, dir), 0L, 10)
     }),
     "sq8_masked_serve" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.Quant.sq8IvfTopKMasked(Catalog.sq8IvfStore(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")), 10)
+      IvfCodec.Sq8.topK(IvfCodec.restrict(
+          Catalog.ivfStore(s, dir, IvfCodec.Sq8),
+          tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")),
+          masked = true),
+        Catalog.embeddings(s, dir), 0L, 10)
     }),
     "pq_topk_filtered" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.Pq.pqIvfTopKAllowed(Catalog.pqIvfStore(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        Catalog.docMeta(s, dir).filter(col("lang") === "en")
-          .select(col("doc_id").as("vec_id")), 10)
+      IvfCodec.Pq.topK(IvfCodec.restrict(
+          Catalog.ivfStore(s, dir, IvfCodec.Pq),
+          Catalog.docMeta(s, dir).filter(col("lang") === "en")
+            .select(col("doc_id").as("vec_id")), masked = false),
+        Catalog.embeddings(s, dir), 0L, 10)
     }),
     "pq_masked_serve" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.Pq.pqIvfTopKMasked(Catalog.pqIvfStore(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")), 10)
+      IvfCodec.Pq.topK(IvfCodec.restrict(
+          Catalog.ivfStore(s, dir, IvfCodec.Pq),
+          tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")),
+          masked = true),
+        Catalog.embeddings(s, dir), 0L, 10)
     }),
     // PRODUCT quantization composed with the coarse quantizer: one byte
     // per subspace (32x smaller than the floats, vs SQ8's 4x); the lookup
@@ -1768,19 +1785,19 @@ object SparkEntry {
     // candidates contribute only their M code bytes, every reconstructed
     // float comes from the committed codebook constants
     "emb_topk_pq" -> ((s, dir) =>
-      graft.ml.Pq.pqIvfTopKFrom(Catalog.pqIvfStore(s, dir),
+      IvfCodec.Pq.topK(Catalog.ivfStore(s, dir, IvfCodec.Pq),
         Catalog.embeddings(s, dir), 0, 10)),
     // batched PQ serving — the sq8_topk_batch shape over the 32x store
     "pq_topk_batch" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.Pq.pqIvfTopKBatchFrom(Catalog.pqIvfStore(s, dir),
-        Catalog.embeddings(s, dir),
-        Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
+      IvfCodec.Pq.topKBatch(Catalog.ivfStore(s, dir, IvfCodec.Pq),
+        Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10,
+        excludeSelf = true, keepRank = false)
     }),
     // the PQ store's content, exploded to scalar so codes pin element-wise
     "pq_store_codes" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, posexplode}
-      Catalog.pqIvfStore(s, dir)
+      Catalog.ivfStore(s, dir, IvfCodec.Pq)
         .select(col("vec_id"), posexplode(col("codes")).as(Seq("pos", "code")))
         .select(col("vec_id"), col("pos"), col("code"))
     }),
@@ -1789,12 +1806,12 @@ object SparkEntry {
     // the same M bytes quantize a tighter distribution (PqrSpec pins the
     // reconstruction-error win over the raw tier)
     "emb_topk_pqr" -> ((s, dir) =>
-      graft.ml.PqResidual.pqrIvfTopKFrom(Catalog.pqrIvfStore(s, dir),
+      IvfCodec.Pqr.topK(Catalog.ivfStore(s, dir, IvfCodec.Pqr),
         Catalog.embeddings(s, dir), 0, 10)),
     // the residual store's content, exploded like pq_store_codes
     "pqr_store_codes" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col, posexplode}
-      Catalog.pqrIvfStore(s, dir)
+      Catalog.ivfStore(s, dir, IvfCodec.Pqr)
         .select(col("vec_id"), col("cell"),
           posexplode(col("codes")).as(Seq("pos", "code")))
         .select(col("vec_id"), col("cell"), col("pos"), col("code"))
@@ -1802,7 +1819,7 @@ object SparkEntry {
     // the residual tier's planted recall gate (stored fixtures, the
     // pq_recall_planted twin — completes the quality ladder)
     "pqr_recall_planted" -> ((s, dir) =>
-      graft.ml.PqResidual.recallAtKFrom(Catalog.plantedPqrIvf(s, dir),
+      IvfCodec.Pqr.recallFrom(Catalog.plantedIvfStore(s, dir, IvfCodec.Pqr),
         Catalog.plantedEmb(s, dir), Catalog.plantedExactTop10(s, dir),
         0L, 10)),
     // residual-PQ upkeep: coarse argmax + residual + committed-codebook
@@ -1817,25 +1834,28 @@ object SparkEntry {
     // semi-joined on the candidate side (pq_topk_filtered's twin)
     "pqr_topk_filtered" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.PqResidual.pqrIvfTopKAllowed(Catalog.pqrIvfStore(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        Catalog.docMeta(s, dir).filter(col("lang") === "en")
-          .select(col("doc_id").as("vec_id")), 10)
+      IvfCodec.Pqr.topK(IvfCodec.restrict(
+          Catalog.ivfStore(s, dir, IvfCodec.Pqr),
+          Catalog.docMeta(s, dir).filter(col("lang") === "en")
+            .select(col("doc_id").as("vec_id")), masked = false),
+        Catalog.embeddings(s, dir), 0L, 10)
     }),
     // the delete lifecycle's masked serve at the residual tier
     "pqr_masked_serve" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.PqResidual.pqrIvfTopKMasked(Catalog.pqrIvfStore(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")), 10)
+      IvfCodec.Pqr.topK(IvfCodec.restrict(
+          Catalog.ivfStore(s, dir, IvfCodec.Pqr),
+          tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")),
+          masked = true),
+        Catalog.embeddings(s, dir), 0L, 10)
     }),
     // batched residual-PQ serving — the pq_topk_batch shape with the
     // candidate's cell feeding the IVFADC reconstruction kernel
     "pqr_topk_batch" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.PqResidual.pqrIvfTopKBatchFrom(Catalog.pqrIvfStore(s, dir),
-        Catalog.embeddings(s, dir),
-        Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
+      IvfCodec.Pqr.topKBatch(Catalog.ivfStore(s, dir, IvfCodec.Pqr),
+        Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10,
+        excludeSelf = true, keepRank = false)
     }),
     // PQ upkeep: new embeddings encode through the COMMITTED codebooks and
     // assign their IVF cell in one stateless projection (no quantizer to
@@ -1850,16 +1870,16 @@ object SparkEntry {
     // exact float re-rank of the survivors — exact fidelity at O(kCoarse)
     // float reads per query instead of O(corpus)
     "pq_rerank" -> ((s, dir) =>
-      graft.ml.Pq.pqRerank(Catalog.pqIvfStore(s, dir),
+      graft.ml.Pq.pqRerank(Catalog.ivfStore(s, dir, IvfCodec.Pq),
         Catalog.embeddings(s, dir), 0, 50, 10)),
     // batched serving over the QUANTIZED store: the ivf_batch shape with the
     // float corpus swapped for the 4x-smaller byte codes — bulk retrieval
     // (hard-negative mining, dedup-against-index) never inflating the store
     "sq8_topk_batch" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.Quant.sq8IvfTopKBatchFrom(Catalog.sq8IvfStore(s, dir),
-        Catalog.embeddings(s, dir),
-        Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
+      IvfCodec.Sq8.topKBatch(Catalog.ivfStore(s, dir, IvfCodec.Sq8),
+        Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10,
+        excludeSelf = true, keepRank = false)
     }),
     // ANN QUALITY as an oracle entry: recall@10 of the LSH and IVF lookups
     // vs the exact baseline, driver-checked every round (not just bucket
@@ -1873,33 +1893,35 @@ object SparkEntry {
     // ad-hoc multi-wave entries: 7-13 jobs each in BENCH_r14)
     "ann_recall" -> ((s, dir) =>
       Ann.recallAtKFrom(Catalog.embeddings(s, dir), Catalog.annBuckets(s, dir),
-        Catalog.ivfFlat(s, dir), Catalog.exactTop10(s, dir), 0, 10)),
+        Catalog.ivfStore(s, dir, IvfCodec.Flat), Catalog.exactTop10(s, dir),
+        0, 10)),
     // quality-regime recall gate (VERDICT r9 #5): a planted 10-clone
     // cluster makes the exact top-10 provably LSH-reachable, so lsh recall
     // is pinned HIGH here (AnnRecallSpec asserts >= 0.8) — a planes/banding
     // regression now moves a non-trivial number on both engines
     "ann_recall_planted" -> ((s, dir) =>
       Ann.recallAtKFrom(Catalog.plantedEmb(s, dir),
-        Catalog.plantedBuckets(s, dir), Catalog.plantedIvfFlat(s, dir),
+        Catalog.plantedBuckets(s, dir),
+        Catalog.plantedIvfStore(s, dir, IvfCodec.Flat),
         Catalog.plantedExactTop10(s, dir), 0, 10)),
     // the PQ tier's driver-checked recall gate in the same planted regime
     // (VERDICT r13 #7) — completes the quality ladder: LSH/IVF via
     // ann_recall_planted, PQ here, floors pinned in PqSpec
     "pq_recall_planted" -> ((s, dir) =>
-      graft.ml.Pq.recallAtKFrom(Catalog.plantedPqIvf(s, dir),
+      IvfCodec.Pq.recallFrom(Catalog.plantedIvfStore(s, dir, IvfCodec.Pq),
         Catalog.plantedEmb(s, dir), Catalog.plantedExactTop10(s, dir),
         0L, 10)),
     // FILTERED recall: the label-constrained lookup vs the exact slice
     // baseline — the number that quantifies post-filtering's recall trade
     // (the filtered-serving contract the docs promise the ladder measures)
     "ann_recall_filtered" -> ((s, dir) =>
-      Ann.recallFilteredFrom(Catalog.ivfFlat(s, dir),
+      Ann.recallFilteredFrom(Catalog.ivfStore(s, dir, IvfCodec.Flat),
         Catalog.embeddings(s, dir), Catalog.exactTop10Filtered(s, dir),
         0L, 3, 10)),
     // the SQ8 tier's recall gate in the same planted regime — the ladder
     // now covers all four serving tiers (LSH, IVF, SQ8, PQ)
     "sq8_recall_planted" -> ((s, dir) =>
-      graft.ml.Quant.recallAtKFrom(Catalog.plantedSq8Ivf(s, dir),
+      IvfCodec.Sq8.recallFrom(Catalog.plantedIvfStore(s, dir, IvfCodec.Sq8),
         Catalog.plantedEmb(s, dir), Catalog.plantedExactTop10(s, dir),
         0L, 10)),
   )
@@ -2600,10 +2622,10 @@ object SparkEntry {
           .replaceAll("\\s+", " ")),
     // ONE oracle for both dense delete-lifecycle ends — identity across
     // the compaction flip IS the contract (cosine carries no corpus stats)
-    "ann_masked_serve" -> Ann.ivfMaskedOracleSql(0L, 10,
-      DeadIdsSql),
-    "ann_tombstone_compact" -> Ann.ivfMaskedOracleSql(0L, 10,
-      DeadIdsSql),
+    "ann_masked_serve" -> IvfCodec.Flat.restrictedOracleSql(0L, 10,
+      DeadIdsSql, masked = true),
+    "ann_tombstone_compact" -> IvfCodec.Flat.restrictedOracleSql(0L, 10,
+      DeadIdsSql, masked = true),
     // DeadIdsSql aliases to vec_id; this oracle's dead CTE needs doc_id
     "rrf_stored_masked" -> graft.ml.Retrieval.rrfStoredMaskedOracleSql(
       Seq("stream", "table", "scan"), 0L,
@@ -2676,58 +2698,60 @@ object SparkEntry {
     "emb_topk_lsh_batch" -> Ann.lshBatchOracleSql(8, 10),
     "emb_topk_lsh_mp_batch" -> Ann.multiProbeBatchOracleSql(8, 10),
     "ann_stream_index" -> Ann.bucketsOracleSql,
-    "emb_topk_ivf" -> Ann.ivfOracleSql(0, 10),
+    "emb_topk_ivf" -> IvfCodec.Flat.oracleSql(0, 10, Ann.BaseSrcSql),
     "ivf_balance" -> Ann.ivfBalanceOracleSql,
     "emb_outliers" -> Ann.ivfOutliersOracleSql(),
     "ivf_drift" -> Ann.ivfDriftOracleSql,
-    "emb_topk_filtered" -> Ann.ivfFilteredOracleSql(0, 3, 10),
+    "emb_topk_filtered" -> IvfCodec.Flat.restrictedOracleSql(0, 10,
+      "SELECT vec_id FROM embeddings WHERE label = 3", masked = false),
     "ann_recall" -> Ann.recallOracleSql(0, 10),
     "ann_recall_filtered" -> Ann.recallFilteredOracleSql(0, 3, 10),
     "ann_recall_planted" -> Ann.recallOracleSql(0, 10,
       Ann.plantedClusterSrcSql(0L, 10)),
-    "pq_recall_planted" -> graft.ml.Pq.pqRecallOracleSql(0L, 10,
+    "pq_recall_planted" -> IvfCodec.Pq.recallOracleSql(0L, 10,
       Ann.plantedClusterSrcSql(0L, 10)),
-    "sq8_recall_planted" -> graft.ml.Quant.sq8RecallOracleSql(0L, 10,
+    "sq8_recall_planted" -> IvfCodec.Sq8.recallOracleSql(0L, 10,
       Ann.plantedClusterSrcSql(0L, 10)),
     "ivf_stream_index" -> Ann.cellsOracleSql,
     "sq8_stream_index" -> graft.ml.Quant.sq8StreamOracleSql,
-    "emb_topk_ivf_batch" -> Ann.ivfBatchOracleSql(8, 10),
-    "emb_topk_filtered_batch" -> Ann.ivfBatchFilteredOracleSql(8, 3, 10),
+    "emb_topk_ivf_batch" -> IvfCodec.Flat.batchOracleSql(8, 10, None),
+    "emb_topk_filtered_batch" -> IvfCodec.Flat.batchOracleSql(8, 10,
+      Some("SELECT vec_id FROM embeddings WHERE label = 3")),
     "ann_compact" -> Ann.bucketsOracleSql,
     "ivf_compact" -> Ann.cellsOracleSql,
     "sq8_compact" -> graft.ml.Quant.sq8StreamOracleSql,
-    "sq8_topk_gen" -> graft.ml.Quant.sq8IvfOracleSql(0, 10),
-    "emb_topk_sq8" -> graft.ml.Quant.sq8IvfOracleSql(0, 10),
+    "sq8_topk_gen" -> IvfCodec.Sq8.oracleSql(0, 10, Ann.BaseSrcSql),
+    "emb_topk_sq8" -> IvfCodec.Sq8.oracleSql(0, 10, Ann.BaseSrcSql),
     "emb_topk_adaptive" -> Ann.ivfAdaptiveOracleSql(0L, 20,
       "SELECT doc_id AS vec_id FROM documents WHERE lang = 'fr'"),
     "hardneg_mine" -> Ann.hardNegOracleSql(32L, 10,
       NearDup.pairCtesSql(0.6)),
-    "sq8_topk_filtered" -> graft.ml.Quant.sq8IvfRestrictedOracleSql(0L, 10,
+    "sq8_topk_filtered" -> IvfCodec.Sq8.restrictedOracleSql(0L, 10,
       "SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'",
       masked = false),
-    "sq8_masked_serve" -> graft.ml.Quant.sq8IvfRestrictedOracleSql(0L, 10,
+    "sq8_masked_serve" -> IvfCodec.Sq8.restrictedOracleSql(0L, 10,
       DeadIdsSql, masked = true),
-    "pq_topk_filtered" -> graft.ml.Pq.pqIvfRestrictedOracleSql(0L, 10,
+    "pq_topk_filtered" -> IvfCodec.Pq.restrictedOracleSql(0L, 10,
       "SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'",
       masked = false),
-    "pq_masked_serve" -> graft.ml.Pq.pqIvfRestrictedOracleSql(0L, 10,
+    "pq_masked_serve" -> IvfCodec.Pq.restrictedOracleSql(0L, 10,
       DeadIdsSql, masked = true),
-    "sq8_topk_batch" -> graft.ml.Quant.sq8IvfBatchOracleSql(8, 10),
-    "emb_topk_pq" -> graft.ml.Pq.pqIvfOracleSql(0, 10),
-    "pq_topk_batch" -> graft.ml.Pq.pqIvfBatchOracleSql(8, 10),
+    "sq8_topk_batch" -> IvfCodec.Sq8.batchOracleSql(8, 10, None),
+    "emb_topk_pq" -> IvfCodec.Pq.oracleSql(0, 10, Ann.BaseSrcSql),
+    "pq_topk_batch" -> IvfCodec.Pq.batchOracleSql(8, 10, None),
     "pq_store_codes" -> graft.ml.Pq.codesOracleSql,
-    "emb_topk_pqr" -> graft.ml.PqResidual.pqrIvfOracleSql(0, 10),
-    "pqr_store_codes" -> graft.ml.PqResidual.codesOracleSql(),
-    "pqr_recall_planted" -> graft.ml.PqResidual.pqrRecallOracleSql(0L, 10,
+    "emb_topk_pqr" -> IvfCodec.Pqr.oracleSql(0, 10, Ann.BaseSrcSql),
+    "pqr_store_codes" -> graft.ml.PqResidual.codesOracleSql,
+    "pqr_recall_planted" -> IvfCodec.Pqr.recallOracleSql(0L, 10,
       Ann.plantedClusterSrcSql(0L, 10)),
-    "pqr_stream_index" -> graft.ml.PqResidual.codesOracleSql(),
-    "pqr_compact" -> graft.ml.PqResidual.codesOracleSql(),
-    "pqr_topk_filtered" -> graft.ml.PqResidual.pqrIvfRestrictedOracleSql(
+    "pqr_stream_index" -> graft.ml.PqResidual.codesOracleSql,
+    "pqr_compact" -> graft.ml.PqResidual.codesOracleSql,
+    "pqr_topk_filtered" -> IvfCodec.Pqr.restrictedOracleSql(
       0L, 10, "SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'",
       masked = false),
-    "pqr_masked_serve" -> graft.ml.PqResidual.pqrIvfRestrictedOracleSql(
+    "pqr_masked_serve" -> IvfCodec.Pqr.restrictedOracleSql(
       0L, 10, DeadIdsSql, masked = true),
-    "pqr_topk_batch" -> graft.ml.PqResidual.pqrIvfBatchOracleSql(8, 10),
+    "pqr_topk_batch" -> IvfCodec.Pqr.batchOracleSql(8, 10, None),
     "pq_stream_index" -> graft.ml.Pq.pqStreamOracleSql,
     "pq_compact" -> graft.ml.Pq.pqStreamOracleSql,
     "pq_rerank" -> graft.ml.Pq.pqRerankOracleSql(0, 50, 10),

@@ -201,7 +201,7 @@ object Ann {
     // pathological bucket holding a corpus-scale fraction (correlated or
     // all-equal embeddings that defeat the planes) then degrades to a
     // shuffle join instead of OOMing the driver on a forced broadcast
-    // (ADVICE r15 — same posture as ivfTopKAllowed)
+    // (ADVICE r15 — same posture as IvfCodec.restrict)
     val cands = bk.filter(col("bucket").isin(qbs: _*))
       .filter(col("vec_id") =!= qVecId)
       .select("vec_id")
@@ -231,7 +231,7 @@ object Ann {
     * the WindowGroupLimit pushdown. Nothing is collected; |Q| can itself
     * be data-scale — bulk lookup against a bucketed corpus is the
     * dedup-against-index-at-ingest shape (NearDup.incrementalDupesFrom's
-    * embedding analogue). Same query-table contract as ivfTopKBatch:
+    * embedding analogue). Same query-table contract as IvfCodec.topKBatch:
     * distinct qids; excludeSelf = false for an external id space.
     * Returns (qid, vec_id, sim), ≤ k rows per query. */
   def topKBatch(emb: DataFrame, bk: DataFrame, queries: DataFrame, k: Int,
@@ -346,10 +346,9 @@ object Ann {
     * vector's nearest centroid; argmax via max(struct) = one
     * partial-aggregated shuffle, ties → lowest cent_id. Catalog.ivfCells
     * materializes this partitioned by cell. */
-  def cellAssignment(emb: DataFrame,
-      cents: Option[DataFrame] = None): DataFrame = {
+  def cellAssignment(emb: DataFrame): DataFrame = {
     val e = emb.select(col("vec_id"), col("embedding").as("emb"))
-    val asg = e.crossJoin(broadcast(cents.getOrElse(centroids(emb))))
+    val asg = e.crossJoin(broadcast(centroids(emb)))
       .select(col("vec_id"), col("cent_id"),
         cosine(col("emb"), col("cemb")).as("csim"))
     asg.groupBy("vec_id")
@@ -360,11 +359,11 @@ object Ann {
   /** The query's `Probes` nearest cell ids — a 1×Cells ranking on the
     * broadcast centroid matrix, collected eagerly (a BOUNDED list of exactly
     * `Probes` longs, the same bounded-collect class as the L bucket keys) so
-    * callers can push it into an index scan as a static In filter. Shared by
-    * the IVF-flat lookup below and the SQ8-over-IVF lookup (Quant). */
-  def probedCells(e: DataFrame, qVecId: Long,
-      cents: Option[DataFrame] = None): Seq[Long] = {
-    val cn = broadcast(cents.getOrElse(centroids(e)))
+    * callers can push it into an index scan as a static In filter — the
+    * in-plan twin of probedCellsOf, used by the assignment-table lookups
+    * below. */
+  def probedCells(e: DataFrame, qVecId: Long): Seq[Long] = {
+    val cn = broadcast(centroids(e))
     e.filter(col("vec_id") === qVecId).crossJoin(cn)
       .select(col("cent_id"), cosine(col("emb"), col("cemb")).as("csim"))
       .orderBy(desc("csim"), asc("cent_id")).limit(Probes)
@@ -380,10 +379,10 @@ object Ann {
     * pushed as a static In filter, giving STATIC partition pruning on the
     * cell-partitioned table — at 100 TB the cell id is the partition key
     * and a lookup touches |probed cells| partitions. Returns (vec_id, sim). */
-  def ivfTopK(emb: DataFrame, cells: DataFrame, qVecId: Long, k: Int,
-      cents: Option[DataFrame] = None): DataFrame = {
+  def ivfTopK(emb: DataFrame, cells: DataFrame, qVecId: Long,
+      k: Int): DataFrame = {
     val e = emb.select(col("vec_id"), col("embedding").as("emb"))
-    val qCells = probedCells(e, qVecId, cents)
+    val qCells = probedCells(e, qVecId)
     val q = broadcast(e.filter(col("vec_id") === qVecId)
       .select(col("emb").as("qemb")))
     cells.filter(col("cell").isin(qCells: _*)).filter(col("vec_id") =!= qVecId)
@@ -394,23 +393,6 @@ object Ann {
       .orderBy(desc("sim"), asc("vec_id"))
       .limit(k)
   }
-
-  /** DuckDB mirror of ivfTopK over the `embeddings` view — the centroid CTE
-    * embeds the same TrainedCentroids literal matrix the Spark plan uses. */
-  def ivfOracleSql(qVecId: Long, k: Int,
-      srcSql: String = BaseSrcSql): String =
-    s"""WITH ${cellCtesSql(srcSql)},
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT $Probes),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId)
-       |SELECT cell.vec_id AS vec_id,
-       |  round(list_dot_product(e.emb, q.qemb) /
-       |        sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |FROM cell JOIN qc USING (cell) JOIN e USING (vec_id), q
-       |WHERE cell.vec_id <> $qVecId
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-
 
   /** FILTERED IVF top-k: the metadata-constrained serving shape ("nearest
     * neighbours among label = L" — the language/source/licence predicate
@@ -424,11 +406,11 @@ object Ann {
     * contract (raise Probes for highly selective predicates; the recall
     * ladder's gates quantify the trade). Returns (vec_id, sim). */
   def ivfTopKFiltered(emb: DataFrame, cells: DataFrame, qVecId: Long,
-      label: Int, k: Int, cents: Option[DataFrame] = None): DataFrame = {
+      label: Int, k: Int): DataFrame = {
     val full = emb.select(col("vec_id"), col("embedding").as("emb"))
     val el = emb.filter(col("label") === label)
       .select(col("vec_id"), col("embedding").as("emb"))
-    val qCells = probedCells(full, qVecId, cents)
+    val qCells = probedCells(full, qVecId)
     val q = broadcast(full.filter(col("vec_id") === qVecId)
       .select(col("emb").as("qemb")))
     cells.filter(col("cell").isin(qCells: _*)).filter(col("vec_id") =!= qVecId)
@@ -439,103 +421,6 @@ object Ann {
       .orderBy(desc("sim"), asc("vec_id"))
       .limit(k)
   }
-
-  /** DuckDB mirror of ivfTopKFiltered: ivfOracleSql's CTE chain plus the
-    * label semi-join on the candidate side. */
-  // No srcSql parameter (ADVICE r15): the label slice below is anchored to
-  // the base `embeddings` table, so a non-base source would silently pair a
-  // re-sourced corpus with a base-table slice — only the base corpus is
-  // supported, and the signature now says so.
-  def ivfFilteredOracleSql(qVecId: Long, label: Int, k: Int): String =
-    s"""WITH ${cellCtesSql(BaseSrcSql)},
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT $Probes),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
-       |el AS (SELECT vec_id FROM embeddings WHERE label = $label)
-       |SELECT cell.vec_id AS vec_id,
-       |  round(list_dot_product(e.emb, q.qemb) /
-       |        sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |FROM cell JOIN qc USING (cell) JOIN e USING (vec_id) JOIN el USING (vec_id), q
-       |WHERE cell.vec_id <> $qVecId
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** BATCHED IVF top-k: serve a whole query TABLE in one declarative plan —
-    * the realistic 100 TB serving shape (queries arrive in batches, not one
-    * at a time), and the scale answer to the single-query path's per-query
-    * driver round-trip: probedCells' bounded collect disappears entirely.
-    * Three stages, all in-plan: (1) probe assignment — each query row ranks
-    * the broadcast centroid matrix and keeps its `Probes` nearest cells (a
-    * |Q|×Cells projection + per-query WindowGroupLimit, no aggregation);
-    * (2) candidates — the probed (qid, cell) rows equi-join the
-    * cell-partitioned assignment table, so each query touches only its
-    * probed cells' members (the join key IS the partition key; a vector
-    * lives in exactly one cell, so no candidate dedup is needed);
-    * (3) ranking — exact cosine + per-query row_number ≤ k (the rank rides
-    * Spark's WindowGroupLimit pushdown: partial top-k map-side, never a
-    * global sort). Nothing is collected; |Q| can itself be data-scale.
-    *
-    * Query-table contract: qids must be DISTINCT (both per-query windows
-    * key on qid — a duplicated qid merges two queries' probe rankings).
-    * `excludeSelf` (default true, matching the single-query lookups)
-    * assumes qids are corpus vec_ids and drops each query's own row from
-    * its candidates; an EXTERNAL query table whose ids live in a different
-    * id space must pass excludeSelf = false, or each query silently loses
-    * the unrelated corpus vector that happens to share its id.
-    * Returns (qid, vec_id, sim), k rows per query. */
-  def ivfTopKBatch(emb: DataFrame, cells: DataFrame, queries: DataFrame,
-      k: Int, cents: Option[DataFrame] = None,
-      excludeSelf: Boolean = true, keepRank: Boolean = false): DataFrame = {
-    val e = emb.select(col("vec_id"), col("embedding").as("emb"))
-    val q = queries.select(col("vec_id").as("qid"),
-      col("embedding").as("qemb"))
-    val probed = probeBatch(q, cents.getOrElse(centroids(emb)))
-    val joined = probed.join(prunedByProbedCells(cells, probed), Seq("cell"))
-    val cand = if (excludeSelf) joined.filter(col("vec_id") =!= col("qid"))
-               else joined
-    topKPerQuery(cand.join(e, Seq("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        asymSim(col("emb"), col("qemb"), col("qn")).as("sim")), k, keepRank)
-  }
-
-  /** FILTERED batched IVF top-k — the serving matrix's fourth corner
-    * (single/batch × unfiltered/filtered): ivfTopKBatch's plan with the
-    * label predicate pre-filtering the embeddings side of the candidate
-    * re-rank, exactly as in ivfTopKFiltered — pushed to the parquet scan,
-    * applied after the cell join bounds candidates, before any ranking
-    * work. Same query contract and fewer-than-k-survivors semantics. */
-  def ivfTopKBatchFiltered(emb: DataFrame, cells: DataFrame,
-      queries: DataFrame, label: Int, k: Int,
-      cents: Option[DataFrame] = None,
-      excludeSelf: Boolean = true): DataFrame = {
-    val el = emb.filter(col("label") === label)
-      .select(col("vec_id"), col("embedding").as("emb"))
-    val q = queries.select(col("vec_id").as("qid"),
-      col("embedding").as("qemb"))
-    val probed = probeBatch(q, cents.getOrElse(centroids(emb)))
-    val joined = probed.join(prunedByProbedCells(cells, probed), Seq("cell"))
-    val cand = if (excludeSelf) joined.filter(col("vec_id") =!= col("qid"))
-               else joined
-    topKPerQuery(cand.join(el, Seq("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        asymSim(col("emb"), col("qemb"), col("qn")).as("sim")), k)
-  }
-
-  /** DuckDB mirror of ivfTopKBatchFiltered: the batch CTE chain with the
-    * label semi-join on the candidate side. */
-  def ivfBatchFilteredOracleSql(maxQid: Long, label: Int, k: Int,
-      srcSql: String = BaseSrcSql): String =
-    s"""WITH ${cellCtesSql(srcSql)},
-       |${batchQueryCtesSql(maxQid)},
-       |el AS (SELECT vec_id FROM embeddings WHERE label = $label),
-       |cand AS (SELECT p.qid AS qid, cell.vec_id AS vec_id,
-       |    round(list_dot_product(e.emb, p.qemb) /
-       |      sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(p.qemb, p.qemb)), 6) AS sim
-       |  FROM probed p JOIN cell USING (cell) JOIN e ON e.vec_id = cell.vec_id
-       |  JOIN el ON el.vec_id = cell.vec_id
-       |  WHERE cell.vec_id <> p.qid)
-       |${batchRankSql(k)}
-       |""".stripMargin.replaceAll("\\s+", " ")
 
   /** Partition-skip the cell-keyed store down to the batch's probed cells
     * BEFORE the candidate join: a broadcast left-semi on the store's
@@ -555,84 +440,6 @@ object Ann {
     // |Q| × Probes cell rows either way
     store.join(broadcast(probed.select("cell")), Seq("cell"), "left_semi")
 
-  // ---- IVF-FLAT serving store (VERDICT r14 #5/#3 job audit) ----
-  // A real IVF-flat index stores the VECTORS inside the cell layout — the
-  // float tier's analogue of sq8IvfStore/pqIvfStore: Catalog.ivfFlat is
-  // embeddings re-laid-out hive-partitioned by cell (vec_id, embedding,
-  // label, cell). Serving from it needs NO corpus join: a lookup reads the
-  // probed partitions' vectors directly, so the former assignment-table ⋈
-  // embeddings exchange pair (2-3 AQE stage jobs per statement, a full
-  // corpus shuffle at scale) disappears from every IVF-float path. The
-  // (vec_id, cell) assignment store stays the build intermediate and the
-  // streamed-upkeep content; this is the read-optimized layout derived
-  // from it — the reference's posture of serving from derived index blocks
-  // (/root/reference/src/table-backend-writeonce.cc:594-636).
-
-  /** ivfTopK served from the FLAT store: ONE bounded query-row collect,
-    * probe arithmetic on the driver, then a single probed-partition scan
-    * ranked against the literal query — a 2-job point lookup. Returns
-    * (vec_id, sim). */
-  def ivfTopKFrom(flat: DataFrame, emb: DataFrame, qVecId: Long,
-      k: Int): DataFrame =
-    ivfTopKFromVec(flat, queryVec(emb, qVecId), qVecId, k)
-
-  private[ml] def ivfTopKFromVec(flat: DataFrame, vec: Array[Double],
-      qVecId: Long, k: Int): DataFrame = {
-    val qemb = litVec(vec)
-    flat.filter(col("cell").isin(probedCellsOf(vec): _*))
-      .filter(col("vec_id") =!= qVecId)
-      .select(col("vec_id"),
-        round(dot(col("embedding"), qemb) /
-          sqrt(dot(col("embedding"), col("embedding")) * lit(selfDot(vec))),
-          6).as("sim"))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-  }
-
-  /** ivfTopKFiltered from the flat store — the label predicate reaches the
-    * flat store's parquet scan as a pushed EqualTo beside the partition
-    * pruning (the store carries the metadata columns precisely so filtered
-    * serving stays one scan). */
-  def ivfTopKFilteredFrom(flat: DataFrame, emb: DataFrame, qVecId: Long,
-      label: Int, k: Int): DataFrame = {
-    val vec = queryVec(emb, qVecId)
-    val qemb = litVec(vec)
-    flat.filter(col("cell").isin(probedCellsOf(vec): _*))
-      .filter(col("label") === label)
-      .filter(col("vec_id") =!= qVecId)
-      .select(col("vec_id"),
-        round(dot(col("embedding"), qemb) /
-          sqrt(dot(col("embedding"), col("embedding")) * lit(selfDot(vec))),
-          6).as("sim"))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-  }
-
-  /** IVF lookup post-filtered to an ALLOWED id set FRAME — the
-    * metadata-filtered shape when the predicate lives in a sidecar table
-    * (document metadata) rather than a column of the vector store itself:
-    * probed candidates left-semi the allowed ids, then rank. The semi is
-    * unhinted — an allowed set is sub-corpus-sized (a language slice), so
-    * a forced broadcast would OOM at data scale; AQE broadcasts it while
-    * small. Same fewer-than-k-survivors contract as the label filter. */
-  def ivfTopKAllowed(flat: DataFrame, emb: DataFrame, qVecId: Long,
-      allowed: DataFrame, k: Int): DataFrame =
-    ivfTopKAllowedAt(flat, queryVec(emb, qVecId), qVecId, allowed, k, Probes)
-
-  private def ivfTopKAllowedAt(flat: DataFrame, vec: Array[Double],
-      qVecId: Long, allowed: DataFrame, k: Int, p: Int): DataFrame = {
-    val qemb = litVec(vec)
-    flat.filter(col("cell").isin(probedCellsOf(vec, p): _*))
-      .filter(col("vec_id") =!= qVecId)
-      .join(allowed.select("vec_id"), Seq("vec_id"), "left_semi")
-      .select(col("vec_id"),
-        round(dot(col("embedding"), qemb) /
-          sqrt(dot(col("embedding"), col("embedding")) * lit(selfDot(vec))),
-          6).as("sim"))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-  }
-
   /** ADAPTIVE probe widening for filtered lookups — the production answer
     * to the fewer-than-k-survivors contract: serve at the standard Probes
     * width, and when the metadata slice thins the probed candidates below
@@ -648,12 +455,13 @@ object Ann {
   def ivfTopKAllowedAdaptive(flat: DataFrame, emb: DataFrame, qVecId: Long,
       allowed: DataFrame, k: Int): DataFrame = {
     val vec = queryVec(emb, qVecId)
+    val store = IvfCodec.restrict(flat, allowed, masked = false)
     val widths = adaptiveWidths
     widths.init.foreach { p =>
-      val at = ivfTopKAllowedAt(flat, vec, qVecId, allowed, k, p)
+      val at = IvfCodec.Flat.topKAt(store, vec, qVecId, k, p)
       if (at.count() >= k) return at
     }
-    ivfTopKAllowedAt(flat, vec, qVecId, allowed, k, widths.last)
+    IvfCodec.Flat.topKAt(store, vec, qVecId, k, widths.last)
   }
 
   /** The probe ladder Probes → 2·Probes → … → Cells, shared by the lookup
@@ -669,18 +477,8 @@ object Ann {
   def ivfAdaptiveOracleSql(qVecId: Long, k: Int, allowedSql: String): String = {
     val widths = adaptiveWidths
     val rCtes = widths.map { p =>
-      s"""r$p AS (SELECT vec_id, sim FROM (
-         |  SELECT cell.vec_id AS vec_id,
-         |    round(list_dot_product(e.emb, q.qemb) /
-         |      sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-         |  FROM cell JOIN (SELECT cent_id AS cell FROM asg
-         |                  WHERE vec_id = $qVecId
-         |                  ORDER BY csim DESC, cent_id ASC LIMIT $p) qc$p
-         |    USING (cell)
-         |  JOIN e USING (vec_id)
-       |  JOIN (SELECT DISTINCT vec_id FROM al) ald ON ald.vec_id = cell.vec_id, q
-         |  WHERE cell.vec_id <> $qVecId)
-         |ORDER BY sim DESC, vec_id LIMIT $k)""".stripMargin
+      s"r$p AS (${IvfCodec.Flat.lookupSql(qVecId, k, p, BaseSrcSql,
+        IvfCodec.restrictionSql(allowedSql, masked = false))})"
     }.mkString(",\n")
     val arms = widths.zipWithIndex.map { case (p, i) =>
       val shorter = widths.take(i)
@@ -691,34 +489,8 @@ object Ann {
       s"SELECT vec_id, sim FROM r$p" +
         (if (cond.nonEmpty) s" WHERE $cond" else "")
     }.mkString(" UNION ALL ")
-    s"""WITH ${cellCtesSql(BaseSrcSql)},
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
-       |al AS ($allowedSql),
-       |$rCtes
-       |$arms
-       |""".stripMargin.replaceAll("\\s+", " ")
+    s"WITH $rCtes $arms".replaceAll("\\s+", " ")
   }
-
-  /** IVF lookup with a TOMBSTONE mask — the DENSE end of the no-reindex
-    * delete lifecycle (bm25StoredTopKMasked's twin, VERDICT r15 #4):
-    * near-dup losers (or any deleted-id set) anti-join the probed
-    * candidates at serving time, so deletes mask results immediately
-    * without touching the stored cells. Unlike the lexical tier, cosine
-    * scores carry NO corpus statistics, so masked serving and a
-    * tombstone-folding compaction (ivfTombstoneCompactServe) return
-    * IDENTICAL rows — pinned by AnnIndexSpec; a hybrid deployment masks
-    * BOTH tiers with the same tombstone set or serves inconsistent
-    * fusions. */
-  def ivfTopKMaskedFrom(flat: DataFrame, emb: DataFrame, qVecId: Long,
-      tombstones: DataFrame, k: Int): DataFrame =
-    // one scoring/tie-break rendering for the whole lifecycle: the masked
-    // serve IS the standard lookup over the anti-joined store (the
-    // anti-join commutes with the cell/self filters), so the spec-pinned
-    // masked == compacted identity cannot drift between two copies of the
-    // cosine chain (review finding, r16)
-    ivfTopKFromVec(
-      flat.join(tombstones.select("vec_id"), Seq("vec_id"), "left_anti"),
-      queryVec(emb, qVecId), qVecId, k)
 
   /** The COMPACTION end of the dense delete lifecycle: fold the tombstoned
     * vectors out of the flat store into a new sorted generation behind the
@@ -735,117 +507,8 @@ object Ann {
         flat.join(tombstones.select("vec_id"), Seq("vec_id"), "left_anti"),
         scratchBase, "cell", Seq("cell", "vec_id"), partitions = Some(4))
     }
-    ivfTopKFromVec(clean, queryVec(emb, qVecId), qVecId, k)
+    IvfCodec.Flat.topK(clean, emb, qVecId, k)
   }
-
-  /** DuckDB mirror of ivfTopKMaskedFrom AND the compacted serve (one
-    * oracle — identity across the flip is the lifecycle's contract): the
-    * ivfOracleSql chain with the dead-id subquery anti-joined. */
-  def ivfMaskedOracleSql(qVecId: Long, k: Int, deadSql: String,
-      srcSql: String = BaseSrcSql): String =
-    s"""WITH ${cellCtesSql(srcSql)},
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT $Probes),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
-       |dead AS ($deadSql)
-       |SELECT cell.vec_id AS vec_id,
-       |  round(list_dot_product(e.emb, q.qemb) /
-       |        sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |FROM cell JOIN qc USING (cell) JOIN e USING (vec_id), q
-       |WHERE cell.vec_id <> $qVecId
-       |  AND cell.vec_id NOT IN (SELECT vec_id FROM dead)
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** DuckDB mirror of ivfTopKAllowed: ivfOracleSql's CTE chain with the
-    * caller-supplied allowed-id subquery (must yield a vec_id column)
-    * semi-joined on the candidate side — the ivfFilteredOracleSql shape
-    * with the predicate externalized. */
-  def ivfAllowedOracleSql(qVecId: Long, k: Int, allowedSql: String,
-      srcSql: String = BaseSrcSql): String =
-    s"""WITH ${cellCtesSql(srcSql)},
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT $Probes),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
-       |al AS ($allowedSql)
-       |SELECT cell.vec_id AS vec_id,
-       |  round(list_dot_product(e.emb, q.qemb) /
-       |        sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |FROM cell JOIN qc USING (cell) JOIN e USING (vec_id)
-       |  JOIN (SELECT DISTINCT vec_id FROM al) ald ON ald.vec_id = cell.vec_id, q
-       |WHERE cell.vec_id <> $qVecId
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** ivfTopKBatch from the flat store: probe assignment, broadcast
-    * probed-cell semi for dynamic partition pruning, candidates ranked
-    * straight off the probed partitions' vectors — the corpus-sized
-    * equi-join on vec_id is GONE (it existed only to fetch floats the flat
-    * layout already co-locates with the cell). Same query contract. */
-  /** The ONE batch candidate chain — probe assignment, probed-cell
-    * pruning of the (possibly pre-restricted) store, optional
-    * self-exclusion, asymmetric scoring. Every batch lookup and the
-    * hard-negative miner compose THIS chain, so a change to the probe or
-    * scoring stages lands once (review finding, r16: the block existed in
-    * four verbatim copies). Returns (qid, vec_id, sim), unranked. */
-  private def scoredCandidates(store: DataFrame, queries: DataFrame,
-      cents: Option[DataFrame], excludeSelf: Boolean): DataFrame = {
-    val q = queries.select(col("vec_id").as("qid"),
-      col("embedding").as("qemb"))
-    val probed = probeBatch(q, cents.getOrElse(centroids(queries)))
-    val joined = probed.join(prunedByProbedCells(store, probed), Seq("cell"))
-    val cand = if (excludeSelf) joined.filter(col("vec_id") =!= col("qid"))
-               else joined
-    cand.select(col("qid"), col("vec_id"),
-      asymSim(col("embedding"), col("qemb"), col("qn")).as("sim"))
-  }
-
-  def ivfTopKBatchFrom(flat: DataFrame, queries: DataFrame, k: Int,
-      cents: Option[DataFrame] = None, excludeSelf: Boolean = true,
-      keepRank: Boolean = false): DataFrame =
-    topKPerQuery(scoredCandidates(flat, queries, cents, excludeSelf),
-      k, keepRank)
-
-  /** ivfTopKBatchFiltered from the flat store — label pushed into the flat
-    * scan beside the dynamic partition pruning. */
-  def ivfTopKBatchFilteredFrom(flat: DataFrame, queries: DataFrame,
-      label: Int, k: Int, cents: Option[DataFrame] = None,
-      excludeSelf: Boolean = true): DataFrame =
-    topKPerQuery(scoredCandidates(flat.filter(col("label") === label),
-      queries, cents, excludeSelf), k)
-
-  /** BATCHED IVF lookup post-filtered to an ALLOWED id set frame — the
-    * batch twin of ivfTopKAllowed (sidecar-defined slice), composed from
-    * the same stages as ivfTopKBatchFrom with the probed partitions'
-    * candidates left-semi'd to the allowed ids BEFORE the probe join, so
-    * the per-query ranking never sees out-of-slice vectors. The semi is
-    * unhinted (slice is sub-corpus-sized, not fixed-bounded; AQE
-    * broadcasts while small). */
-  def ivfTopKBatchAllowed(flat: DataFrame, queries: DataFrame,
-      allowed: DataFrame, k: Int, cents: Option[DataFrame] = None,
-      excludeSelf: Boolean = true, keepRank: Boolean = false): DataFrame =
-    // the allowed semi commutes with the probed-cell pruning — the store
-    // is restricted BEFORE the shared chain, same rows either way
-    topKPerQuery(scoredCandidates(
-      flat.join(allowed.select("vec_id"), Seq("vec_id"), "left_semi"),
-      queries, cents, excludeSelf), k, keepRank)
-
-  /** DuckDB mirror of ivfTopKBatchAllowed: ivfBatchOracleSql's CTE chain
-    * with the caller-supplied allowed-id subquery semi-joined on the
-    * candidate side (the ivfAllowedOracleSql shape, batched). */
-  def ivfBatchAllowedOracleSql(maxQid: Long, k: Int, allowedSql: String,
-      srcSql: String = BaseSrcSql): String =
-    s"""WITH ${cellCtesSql(srcSql)},
-       |${batchQueryCtesSql(maxQid)},
-       |al AS ($allowedSql),
-       |cand AS (SELECT p.qid AS qid, cell.vec_id AS vec_id,
-       |    round(list_dot_product(e.emb, p.qemb) /
-       |      sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(p.qemb, p.qemb)), 6) AS sim
-       |  FROM probed p JOIN cell USING (cell) JOIN e ON e.vec_id = cell.vec_id
-       |    JOIN (SELECT DISTINCT vec_id FROM al) ald ON ald.vec_id = cell.vec_id
-       |  WHERE cell.vec_id <> p.qid)
-       |${batchRankSql(k)}
-       |""".stripMargin.replaceAll("\\s+", " ")
 
   /** HARD-NEGATIVE mining over the stored IVF-flat index — the
     * contrastive-training data op: for each query vector, the top-k
@@ -858,10 +521,8 @@ object Ann {
     * whole training set's negatives in one statement — the realistic
     * 100 TB shape). Returns (qid, vec_id, sim), ≤ k rows per query. */
   def hardNegatives(flat: DataFrame, queries: DataFrame,
-      positives: DataFrame, k: Int,
-      cents: Option[DataFrame] = None,
-      excludeTopM: Int = 0): DataFrame = {
-    val scored = scoredCandidates(flat, queries, cents, excludeSelf = true)
+      positives: DataFrame, k: Int, excludeTopM: Int = 0): DataFrame = {
+    val scored = IvfCodec.Flat.candidates(flat, queries, excludeSelf = true)
     // excludeTopM: each query's top-M of the PLAIN ranking are treated as
     // self-supervised positives INSIDE the same chain — the window rides
     // the qid exchange the final top-k already needs, instead of a second
@@ -895,13 +556,13 @@ object Ann {
            |      ORDER BY sim DESC, vec_id ASC) AS rk FROM cand)
            |  WHERE rk <= $excludeTopM""".stripMargin
     s"""WITH ${cellCtesSql(BaseSrcSql)},
+       |${IvfCodec.Flat.codedCtesSql},
        |${batchQueryCtesSql(maxQid)},
        |$pairCtes,
-       |cand AS (SELECT p.qid AS qid, cell.vec_id AS vec_id,
-       |    round(list_dot_product(e.emb, p.qemb) /
-       |      sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(p.qemb, p.qemb)), 6) AS sim
-       |  FROM probed p JOIN cell USING (cell) JOIN e ON e.vec_id = cell.vec_id
-       |  WHERE cell.vec_id <> p.qid),
+       |cand AS (SELECT p.qid AS qid, coded.vec_id AS vec_id,
+       |    ${IvfCodec.Flat.simSql("p.qemb")} AS sim
+       |  FROM probed p JOIN coded USING (cell)
+       |  WHERE coded.vec_id <> p.qid),
        |pos AS (SELECT doc_a AS qid, doc_b AS vec_id FROM dup
        |  UNION ALL SELECT doc_b, doc_a FROM dup
        |  $selfPos),
@@ -915,17 +576,17 @@ object Ann {
        |""".stripMargin.replaceAll("\\s+", " ")
   }
 
-  /** The batched probe stage shared by ivfTopKBatch and the SQ8 batch
-    * lookup (Quant.sq8IvfTopKBatchFrom): each (qid, qemb) row of `q` ranks
+  /** The batched probe stage of every codec's batch lookup
+    * (IvfCodec.topKBatch): each (qid, qemb) row of `q` ranks
     * the broadcast centroid matrix and keeps its `Probes` nearest cells —
     * a |Q|×Cells projection + per-query WindowGroupLimit, no aggregation,
     * no driver round-trip. Also carries the query self-dot `qn` so the
     * downstream ranking pays the query norm once per probed row (it
     * materializes at the candidate shuffle), not once per candidate.
     * Returns (qid, qemb, qn, cell), `Probes` rows per query. */
-  private[ml] def probeBatch(q: DataFrame, cents: DataFrame): DataFrame = {
+  private[ml] def probeBatch(q: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    q.crossJoin(broadcast(cents))
+    q.crossJoin(broadcast(centroids(q)))
       .select(col("qid"), col("qemb"), col("cent_id").as("cell"),
         cosine(col("qemb"), col("cemb")).as("csim"))
       .withColumn("rk", row_number().over(
@@ -935,25 +596,10 @@ object Ann {
         dot(col("qemb"), col("qemb")).as("qn"), col("cell"))
   }
 
-  /** DuckDB mirror of ivfTopKBatch for the query batch vec_id < maxQid:
-    * same probe ranking (csim DESC, cent_id ASC per query), same candidate
-    * join, same rounded-cosine rank with the identical tie-break. */
-  def ivfBatchOracleSql(maxQid: Long, k: Int,
-      srcSql: String = BaseSrcSql): String =
-    s"""WITH ${cellCtesSql(srcSql)},
-       |${batchQueryCtesSql(maxQid)},
-       |cand AS (SELECT p.qid AS qid, cell.vec_id AS vec_id,
-       |    round(list_dot_product(e.emb, p.qemb) /
-       |      sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(p.qemb, p.qemb)), 6) AS sim
-       |  FROM probed p JOIN cell USING (cell) JOIN e ON e.vec_id = cell.vec_id
-       |  WHERE cell.vec_id <> p.qid)
-       |${batchRankSql(k)}
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** The batched-oracle query + probe CTEs shared by ivfBatchOracleSql and
-    * Quant.sq8IvfBatchOracleSql: the query batch (corpus rows with
+  /** The batched-oracle query + probe CTEs of IvfCodec.batchOracleSql and
+    * hardNegOracleSql: the query batch (corpus rows with
     * vec_id < maxQid) and its per-query `Probes` nearest cells ranked from
-    * the shared `asg` CTE with ivfTopKBatch's exact tie-break. */
+    * the shared `asg` CTE with IvfCodec.topKBatch's exact tie-break. */
   private[ml] def batchQueryCtesSql(maxQid: Long): String =
     s"""q AS (SELECT vec_id AS qid, emb AS qemb FROM e WHERE vec_id < $maxQid),
        |probed AS (SELECT qid, qemb, cell FROM (
@@ -1050,16 +696,6 @@ object Ann {
             slice(col("embedding"), half + 1, Dims - half)).as("embedding"))
     }
     variants.foldLeft(e)(_ unionAll _)
-  }
-
-  /** recallAtK over the planted cluster — the quality-regime recall gate:
-    * both index derivations and the exact baseline run over the SAME
-    * augmented corpus (ad-hoc derived and cached for the statement, like
-    * the other planted entries). */
-  def recallAtKPlanted(emb: DataFrame, qVecId: Long, m: Int, k: Int): DataFrame = {
-    val e = graft.util.Caches.track(plantedCluster(emb, qVecId, m).cache())
-    recallAtK(e, graft.util.Caches.track(bucketIds(e).cache()),
-      graft.util.Caches.track(cellAssignment(e).cache()), qVecId, k)
   }
 
   /** nearDupCos at a REALISTIC threshold (0.9+) over the planted corpus:
@@ -1232,7 +868,8 @@ object Ann {
   def recallFilteredFrom(flat: DataFrame, emb: DataFrame, exact: DataFrame,
       qVecId: Long, label: Int, k: Int): DataFrame = {
     val ids = exact.select("vec_id").collect().map(_.getLong(0)).toSet
-    val got = ivfTopKFilteredFrom(flat, emb, qVecId, label, k)
+    val got = IvfCodec.Flat.topK(flat.filter(col("label") === label), emb,
+        qVecId, k)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     recallRows(emb.sparkSession, ids, Seq("ivf_filtered" -> got), k)
   }
@@ -1249,7 +886,9 @@ object Ann {
        |        sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
        |    FROM e JOIN el USING (vec_id), q WHERE e.vec_id <> $qVecId)
        |  ORDER BY sim DESC, vec_id LIMIT $k),
-       |flr AS ((${ivfFilteredOracleSql(qVecId, label, k)}))
+       |flr AS ((${IvfCodec.Flat.restrictedOracleSql(qVecId, k,
+            s"SELECT vec_id FROM embeddings WHERE label = $label",
+            masked = false)}))
        |SELECT 'ivf_filtered' AS method, count(*) AS hits,
        |  round(count(*) * 1.0 / $k, 4) AS recall
        |FROM flr WHERE vec_id IN (SELECT vec_id FROM exact)
@@ -1338,8 +977,8 @@ object Ann {
       .unionAll(topKWithKeys(emb, bk, vec, queryMultiProbeKeysOf(vec),
           qVecId, k)
         .select(lit("lsh_mp").as("method"), col("vec_id")))
-      .unionAll(ivfTopKFromVec(flat, vec, qVecId, k)
-        .select(lit("ivf").as("method"), col("vec_id")))
+      .unionAll(IvfCodec.Flat.topKAt(flat, vec, qVecId, k, Probes)
+        .select(lit(IvfCodec.Flat.name).as("method"), col("vec_id")))
       .collect().map(r => (r.getString(0), r.getLong(1)))
     recallRows(emb.sparkSession, ids,
       Seq("lsh", "lsh_mp", "ivf").map(m =>
@@ -1350,7 +989,7 @@ object Ann {
     * (each already verified stand-alone) composed as CTE subqueries. */
   /** ONE rendering of the exact brute-force top-k subquery — shared by the
     * LSH/IVF recall oracle below AND the PQ recall oracle
-    * (Pq.pqRecallOracleSql), so the exact tier every recall gate compares
+    * (IvfCodec.recallOracleSql), so the exact tier every recall gate compares
     * against cannot drift between them (the cellCtesSql convention). */
   private[ml] def exactTopKSql(qVecId: Long, k: Int, srcSql: String): String =
     s"""WITH e AS ($srcSql),
@@ -1367,7 +1006,7 @@ object Ann {
     s"""WITH exact AS ((${exact})),
        |lshr AS ((${oracleSql(qVecId, k, srcSql)})),
        |lshmpr AS ((${multiProbeOracleSql(qVecId, k, srcSql)})),
-       |ivfr AS ((${ivfOracleSql(qVecId, k, srcSql)}))
+       |ivfr AS ((${IvfCodec.Flat.oracleSql(qVecId, k, srcSql)}))
        |SELECT 'lsh' AS method, count(*) AS hits,
        |  round(count(*) * 1.0 / $k, 4) AS recall
        |FROM lshr WHERE vec_id IN (SELECT vec_id FROM exact)
@@ -1384,7 +1023,7 @@ object Ann {
 
   /** Shared oracle CTE chain `e, c, asg, cell` — ONE rendering of the
     * coarse quantizer (centroid VALUES + cosine assignment + per-vector
-    * argmax) used by BOTH ivfOracleSql and cellsOracleSql, so the two
+    * argmax) used by BOTH IvfCodec's oracles and cellsOracleSql, so the two
     * entries pinning the same quantizer cannot drift. */
   private[ml] def cellCtesSql(srcSql: String): String = {
     val cRows = TrainedCentroids.matrix.zipWithIndex

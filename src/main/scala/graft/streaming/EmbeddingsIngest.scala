@@ -72,7 +72,7 @@ object EmbeddingsIngest {
   }
 
   /** Stream-derived COMPOSED SQ8×IVF rows (vec_id, cell, codes) — the
-    * upkeep of Catalog.sq8IvfStore as ONE stateless per-row projection:
+    * upkeep of the SQ8 Catalog.ivfStore as ONE stateless per-row projection:
     * the coarse-quantizer argmax (cellExpr, as in cellRows) and the frozen
     * affine encode (Quant.codesFrozen — mn/scale are the constants the
     * trained store ships; re-deriving them per batch would re-scale the
@@ -108,7 +108,7 @@ object EmbeddingsIngest {
     }
 
   /** Stream-derived COMPOSED residual-PQ×IVF rows (vec_id, cell, codes) —
-    * the upkeep of Catalog.pqrIvfStore as one stateless per-row
+    * the upkeep of the residual-PQ Catalog.ivfStore as one stateless per-row
     * projection: the coarse argmax (cellExpr), the residual against THAT
     * cell's committed centroid, and the residual-codebook encode — the
     * IVFADC ingest path. Both constant tables are frozen at train time,

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
-import graft.ml.Ann
+import graft.ml.{Ann, IvfCodec}
 import graft.model.Catalog
 
 /** VERDICT r5 #1 — the ANN entries must READ the materialized index, not
@@ -32,7 +32,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // row-group skipping at the scan, no runtime bucket join
     assert(p.contains("In(bucket"), s"bucket In filter not pushed:\n$p")
     assert(new java.io.File(
-      s"/root/repo/.graft-cache/${Catalog.cacheVersionTag}").exists())
+      s"${Catalog.cacheRoot}/${Catalog.cacheVersionTag}").exists())
     assert(df.count() == 10)
   }
 
@@ -98,55 +98,6 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(df.columns.toSeq == Seq("vec_a", "vec_b", "cos"))
   }
 
-  test("batched IVF serving == per-query single lookups, fully in-plan") {
-    // the batch path must answer each query EXACTLY as the single-query
-    // path does (same probes, same candidates, same rounded-cosine
-    // tie-break) while keeping everything declarative: no per-query
-    // driver round-trip, no nested-loop join anywhere in the plan
-    val emb = Catalog.embeddings(spark, dir)
-    val cells = Catalog.ivfCells(spark, dir)
-    val df = SparkEntry.queries("emb_topk_ivf_batch")(spark, dir)
-    val p = plan(df)
-    assert(p.contains("ivf_flat"), s"batch plan does not scan ivf_flat:\n$p")
-    // the only allowed cross shape is the probe stage's |Q|×Cells expansion
-    // against the BROADCAST 16-row constant centroid matrix; candidates
-    // must arrive through a HASH join on the cell key, never a cartesian
-    // product between data-scaled sides
-    assert(!p.contains("CartesianProduct"),
-      s"batch plan has a cartesian product:\n$p")
-    assert(p.contains("HashJoin [cell#") || p.contains("HashJoin [cast(cell#")
-      || p.contains("hashpartitioning(cell#"),
-      s"candidate join is not a hash join on cell:\n$p")
-    // BOTH per-query ranks ride the pushdown — the probe stage's
-    // row_number <= Probes AND the final top-k's row_number <= k; a single
-    // occurrence means one of them degraded to a full Window materializing
-    // every candidate
-    val wgl = "WindowGroupLimit".r.findAllIn(p).size
-    assert(wgl >= 2,
-      s"expected both per-query ranks as WindowGroupLimit, found $wgl:\n$p")
-    // the cell-store scan must carry a PARTITION filter driven by the
-    // batch's probed cells (broadcast left-semi → dynamic partition
-    // pruning) — a small batch must not read every store partition
-    // (VERDICT r11 #1)
-    assert("""PartitionFilters: \[[^\]]*(dynamicpruning|cell#\d+[^\]]* IN )""".r
-        .findFirstIn(p).isDefined,
-      s"no probed-cell partition filter on the batch ivf_flat scan:\n$p")
-    val batch = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val singles = (0L until 8L).flatMap { qid =>
-      Ann.ivfTopK(emb, cells, qid, 10).collect()
-        .map(r => (qid, r.getLong(0), r.getDouble(1)))
-    }.toSet
-    assert(batch == singles)
-    // the external-id-space escape hatch: with excludeSelf = false a
-    // corpus-drawn query keeps its own row, which must rank first (sim 1.0)
-    val self = Ann.ivfTopKBatchFrom(Catalog.ivfFlat(spark, dir),
-        emb.filter(col("vec_id") < 4), 1, excludeSelf = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(self.length == 4 && self.forall(r => r._1 == r._2 && r._3 == 1.0),
-      s"excludeSelf=false must rank each query's own row first: ${self.toSeq}")
-  }
-
   test("batched LSH serving == per-query single lookups, bucket equi-join") {
     // the LSH twin of the batched IVF test: each query row hashes ITSELF
     // into its L bucket keys in-plan (no per-query driver collect), and
@@ -182,8 +133,9 @@ class AnnIndexSpec extends AnyFunSuite {
   test("filtered batch == per-query filtered singles, label pushed") {
     val emb = Catalog.embeddings(spark, dir)
     val cells = Catalog.ivfCells(spark, dir)
-    val bdf = Ann.ivfTopKBatchFilteredFrom(Catalog.ivfFlat(spark, dir),
-      emb.filter(col("vec_id") < 8), 3, 10)
+    val bdf = IvfCodec.Flat.topKBatch(
+      Catalog.ivfStore(spark, dir, IvfCodec.Flat).filter(col("label") === 3),
+      emb.filter(col("vec_id") < 8), 10, excludeSelf = true, keepRank = false)
     val batch = bdf.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val singles = (0L until 8L).flatMap { qid =>
@@ -197,14 +149,15 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("adaptive probe widening: static when wide enough, exact-slice at the ladder end") {
     import spark.implicits._
-    val flat = Catalog.ivfFlat(spark, dir)
+    val flat = Catalog.ivfStore(spark, dir, IvfCodec.Flat)
     val emb = Catalog.embeddings(spark, dir)
     val all = emb.select(col("vec_id"))
     // unselective slice: the standard width already yields k — the
     // adaptive lookup must equal the static filtered lookup exactly
     val adaptive = Ann.ivfTopKAllowedAdaptive(flat, emb, 0L, all, 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val static0 = Ann.ivfTopKAllowed(flat, emb, 0L, all, 5)
+    val static0 = IvfCodec.Flat.topK(
+        IvfCodec.restrict(flat, all, masked = false), emb, 0L, 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(adaptive == static0)
     // a tiny slice can never reach k: the ladder must end at an EXACT
@@ -224,20 +177,17 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("dense tombstone mask bites and == tombstone-folded compaction") {
     import spark.implicits._
-    val flat = Catalog.ivfFlat(spark, dir)
+    val flat = Catalog.ivfStore(spark, dir, IvfCodec.Flat)
     val emb = Catalog.embeddings(spark, dir)
     // tombstones drawn from the unmasked top-k, so the mask provably bites
-    // regardless of fixture clustering (the RetrievalSpec convention)
-    val unmasked = Ann.ivfTopKFrom(flat, emb, 0L, 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val dead = unmasked.take(2).map(_._1)
-    val masked = Ann.ivfTopKMaskedFrom(flat, emb, 0L,
-        dead.toDF("vec_id"), 10)
+    // (survivor sims are pinned per codec in IvfCodecSpec)
+    val dead = IvfCodec.Flat.topK(flat, emb, 0L, 10)
+      .collect().take(2).map(_.getLong(0)).toSeq
+    val masked = IvfCodec.Flat.topK(
+        IvfCodec.restrict(flat, dead.toDF("vec_id"), masked = true),
+        emb, 0L, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(masked.map(_._1).toSet.intersect(dead.toSet).isEmpty)
-    // cosine carries no corpus statistics: surviving scores are unchanged
-    val um = unmasked.toMap
-    assert(masked.forall { case (id, s) => um.get(id).forall(_ == s) })
     // the compaction end serves IDENTICAL rows from the flipped generation
     val scratch = java.nio.file.Files
       .createTempDirectory("ann-tomb").toString
@@ -255,12 +205,13 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("hardNegatives == batch lookup minus the positives, rank re-closed") {
     import spark.implicits._
-    val flat = Catalog.ivfFlat(spark, dir)
+    val flat = Catalog.ivfStore(spark, dir, IvfCodec.Flat)
     val queries = Catalog.embeddings(spark, dir).filter(col("vec_id") < 4)
     // baseline: plain batch top-(k+2); positives = each query's ranks 1
     // and 3 — excluding mid-list positives must CLOSE the rank gap, not
     // just truncate (the contrastive-mining contract)
-    val base = Ann.ivfTopKBatchFrom(flat, queries, 12, keepRank = true)
+    val base = IvfCodec.Flat.topKBatch(flat, queries, 12,
+        excludeSelf = true, keepRank = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getInt(3)))
     val pos = base.filter(r => r._4 == 1 || r._4 == 3)

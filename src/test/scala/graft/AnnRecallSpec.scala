@@ -29,6 +29,14 @@ class AnnRecallSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
   }
 
+  /** recallAtK over the planted cluster — both index derivations and the
+    * exact baseline over the SAME augmented corpus, derived in-session. */
+  private def plantedLshIvf(emb: org.apache.spark.sql.DataFrame) = {
+    val e = graft.util.Caches.track(Ann.plantedCluster(emb, 0L, 10).cache())
+    Ann.recallAtK(e, graft.util.Caches.track(Ann.bucketIds(e).cache()),
+      graft.util.Caches.track(Ann.cellAssignment(e).cache()), 0L, K)
+  }
+
   test("trained-centroid IVF recall@10 over sampled queries") {
     val emb = Catalog.embeddings(spark, dir)
     val cells = Catalog.ivfCells(spark, dir)
@@ -55,7 +63,7 @@ class AnnRecallSpec extends AnyFunSuite {
     // hyperplane index MUST recover most of it — the floor a flat-corpus
     // recall pinned at 0.0 could never enforce. IVF must also find the
     // cluster (it lands in the query's own cell, probed first).
-    val rows = Ann.recallAtKPlanted(Catalog.embeddings(spark, dir), 0L, 10, 10)
+    val rows = plantedLshIvf(Catalog.embeddings(spark, dir))
       .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
     graft.util.Caches.drain()
     assert(rows("lsh") >= 0.8, s"lsh planted recall ${rows("lsh")} < 0.8")
@@ -78,8 +86,8 @@ class AnnRecallSpec extends AnyFunSuite {
   }
 
   test("stored-fixture gates == the in-engine planted derivations (r15)") {
-    // the entries serve recallAtKFrom over Catalog.planted* stores; pin
-    // them row-for-row to the ad-hoc recallAtKPlanted functions they
+    // the entries serve the recall gates over Catalog.planted* stores; pin
+    // them row-for-row to the in-session planted derivations they
     // replaced — the same flat==cells equality pin the other store
     // migrations carry (review finding, r15)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -87,11 +95,11 @@ class AnnRecallSpec extends AnyFunSuite {
     try {
       val emb = Catalog.embeddings(spark, dir)
       assert(rows(SparkEntry.queries("ann_recall_planted")(spark, dir))
-        == rows(Ann.recallAtKPlanted(emb, 0L, 10, K)))
+        == rows(plantedLshIvf(emb)))
       assert(rows(SparkEntry.queries("sq8_recall_planted")(spark, dir))
-        == rows(graft.ml.Quant.recallAtKPlanted(emb, 0L, 10, K)))
+        == rows(TestSpark.plantedRecall(graft.ml.IvfCodec.Sq8, emb)))
       assert(rows(SparkEntry.queries("pq_recall_planted")(spark, dir))
-        == rows(graft.ml.Pq.recallAtKPlanted(emb, 0L, 10, K)))
+        == rows(TestSpark.plantedRecall(graft.ml.IvfCodec.Pq, emb)))
       assert(rows(SparkEntry.queries("ann_recall")(spark, dir))
         == rows(Ann.recallAtK(emb, Catalog.annBuckets(spark, dir),
           Catalog.ivfCells(spark, dir), 0L, K)))

@@ -114,8 +114,9 @@ class BenchArtifactsSpec extends AnyFunSuite {
     // other machine); floor 3.0 s calibrated against the planning-heavy
     // quiet entries (a1_max/decontaminate_report sit at 1.5-2 s of pure
     // AQE-wave driver latency on an honest quiet run — ADVICE r21)
-    val cores =
-      if (a.has("cores")) a.get("cores").asInt() else 32
+    assert(a.has("cores"),
+      "bench_last.json predates `cores`: regenerate it with graft.Bench")
+    val cores = a.get("cores").asInt()
     val it = a.get("queries").fields()
     while (it.hasNext) {
       val e = it.next()

@@ -20,6 +20,25 @@ class CatalogSpec extends AnyFunSuite {
     assert(e.getMessage.contains(dir), e.getMessage)
   }
 
+  test("a truncated single-file source fails loud instead of re-laying") {
+    // the re-lay reads the source footer for its split count: a corrupt
+    // footer is a corrupt source, and must raise rather than quietly
+    // re-lay under a different split count
+    import TestSpark.spark
+    val dir = java.nio.file.Files.createTempDirectory("graft-truncated")
+    try {
+      val src = java.nio.file.Paths.get("/root/testdata/sf0.001/embeddings.parquet")
+      val bytes = java.nio.file.Files.readAllBytes(src)
+      java.nio.file.Files.write(dir.resolve("embeddings.parquet"),
+        bytes.take(bytes.length / 2))
+      // raised by the footer read itself, before any Spark job is planned
+      val e = intercept[RuntimeException] {
+        Catalog.table(spark, dir.toString, "embeddings")
+      }
+      assert(e.getMessage.contains("is not a Parquet file"), e.getMessage)
+    } finally graft.ingest.Compact.rmTree(dir.toString)
+  }
+
   test("benchBands sidecar equals the live bench-split band build, and the " +
       "fuzzy entry memoizes its probe frame per statement window") {
     import TestSpark.spark

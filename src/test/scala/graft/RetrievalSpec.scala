@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ml.{Ann, CorpusOps, Retrieval}
+import graft.ml.{Ann, CorpusOps, IvfCodec, Retrieval}
 import graft.model.Catalog
 
 /** BM25 / hybrid-fusion retrieval and the bloom-pruned decontamination —
@@ -265,7 +265,7 @@ class RetrievalSpec extends AnyFunSuite {
   test("rrfStoredFiltered: all hits in slice, ranks decompose per tier") {
     val terms = Seq("merge", "stream", "window")
     val df = Retrieval.rrfStoredFiltered(Catalog.lexIndex(spark, dir),
-      Catalog.docMeta(spark, dir), Catalog.ivfFlat(spark, dir),
+      Catalog.docMeta(spark, dir), Catalog.ivfStore(spark, dir, IvfCodec.Flat),
       Catalog.embeddings(spark, dir), terms, 0L, "en", 20, 10)
     val got = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(got.nonEmpty)
@@ -277,10 +277,11 @@ class RetrievalSpec extends AnyFunSuite {
     val lexIds = Retrieval.bm25StoredTopKFiltered(Catalog.lexIndex(spark, dir),
       Catalog.docMeta(spark, dir), terms, "en", 20)
       .collect().map(_.getLong(0)).toSet
-    val denIds = graft.ml.Ann.ivfTopKAllowed(Catalog.ivfFlat(spark, dir),
-      Catalog.embeddings(spark, dir), 0L,
-      Catalog.docMeta(spark, dir).filter(col("lang") === "en")
-        .select(col("doc_id").as("vec_id")), 20)
+    val denIds = IvfCodec.Flat.topK(IvfCodec.restrict(
+        Catalog.ivfStore(spark, dir, IvfCodec.Flat),
+        Catalog.docMeta(spark, dir).filter(col("lang") === "en")
+          .select(col("doc_id").as("vec_id")), masked = false),
+      Catalog.embeddings(spark, dir), 0L, 20)
       .collect().map(_.getLong(0)).toSet
     assert(denIds.subsetOf(enIds), "dense tier leaked outside the slice")
     assert(got.forall { case (id, _) =>
@@ -318,7 +319,7 @@ class RetrievalSpec extends AnyFunSuite {
   test("rrfStored serves from stored indexes only") {
     val df = Retrieval.rrfStored(Catalog.lexIndex(spark, dir),
       Catalog.lexStats(spark, dir), Catalog.embeddings(spark, dir),
-      Catalog.ivfFlat(spark, dir), Seq("merge", "stream", "window"),
+      Catalog.ivfStore(spark, dir, IvfCodec.Flat), Seq("merge", "stream", "window"),
       0L, 20, 10)
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("lex_index") && p.contains("ivf_flat"),
@@ -342,7 +343,7 @@ class RetrievalSpec extends AnyFunSuite {
     val queries = Seq(0L -> terms, 1L -> Seq("hash", "join"))
     val bdf = Retrieval.rrfStoredBatch(Catalog.lexIndex(spark, dir),
       Catalog.lexStats(spark, dir),
-      Catalog.ivfFlat(spark, dir), queries.toDF("qid", "terms"),
+      Catalog.ivfStore(spark, dir, IvfCodec.Flat), queries.toDF("qid", "terms"),
       Catalog.embeddings(spark, dir).filter(col("vec_id") < 2), 20, 10)
     // BOTH qid slices check against their single-query paths: a fusion
     // window accidentally not partitioned by qid could still produce a
@@ -352,7 +353,7 @@ class RetrievalSpec extends AnyFunSuite {
         .map(r => (r.getLong(1), r.getDouble(2))).toSet
       val single = Retrieval.rrfStored(Catalog.lexIndex(spark, dir),
         Catalog.lexStats(spark, dir), Catalog.embeddings(spark, dir),
-        Catalog.ivfFlat(spark, dir), ts, qid, 20, 10).collect()
+        Catalog.ivfStore(spark, dir, IvfCodec.Flat), ts, qid, 20, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(slice == single, s"qid $qid slice diverges from single path")
     }
@@ -398,12 +399,12 @@ class RetrievalSpec extends AnyFunSuite {
     // provably bites on each side
     val lexTop = Retrieval.bm25StoredTopK(Catalog.lexIndex(spark, dir),
       Catalog.lexStats(spark, dir), terms, 5).collect().map(_.getLong(0))
-    val denTop = Ann.ivfTopKFrom(Catalog.ivfFlat(spark, dir),
+    val denTop = IvfCodec.Flat.topK(Catalog.ivfStore(spark, dir, IvfCodec.Flat),
       Catalog.embeddings(spark, dir), 0L, 5).collect().map(_.getLong(0))
     val dead = (lexTop.take(1) ++ denTop.take(1)).distinct.toSeq
     val fusedM = Retrieval.rrfStoredMasked(Catalog.lexIndex(spark, dir),
       Catalog.lexStats(spark, dir), Catalog.embeddings(spark, dir),
-      Catalog.ivfFlat(spark, dir), dead.toDF("doc_id"), terms, 0L, 20, 10)
+      Catalog.ivfStore(spark, dir, IvfCodec.Flat), dead.toDF("doc_id"), terms, 0L, 20, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(fusedM.nonEmpty)
     assert(fusedM.map(_._1).toSet.intersect(dead.toSet).isEmpty,
@@ -412,9 +413,10 @@ class RetrievalSpec extends AnyFunSuite {
     val lexIds = Retrieval.bm25StoredTopKMasked(Catalog.lexIndex(spark, dir),
       Catalog.lexStats(spark, dir), dead.toDF("doc_id"), terms, 20)
       .collect().map(_.getLong(0)).toSet
-    val denIds = Ann.ivfTopKMaskedFrom(Catalog.ivfFlat(spark, dir),
-      Catalog.embeddings(spark, dir), 0L,
-      dead.toDF("vec_id"), 20).collect().map(_.getLong(0)).toSet
+    val denIds = IvfCodec.Flat.topK(IvfCodec.restrict(
+        Catalog.ivfStore(spark, dir, IvfCodec.Flat), dead.toDF("vec_id"),
+        masked = true),
+      Catalog.embeddings(spark, dir), 0L, 20).collect().map(_.getLong(0)).toSet
     assert(fusedM.forall { case (id, _) =>
       lexIds.contains(id) || denIds.contains(id) })
   }
@@ -425,12 +427,12 @@ class RetrievalSpec extends AnyFunSuite {
     val terms = Seq("merge", "stream", "window")
     def run(dead: Seq[Long]) = Retrieval.rrfStoredFilteredMasked(
       Catalog.lexIndex(spark, dir), Catalog.docMeta(spark, dir),
-      Catalog.ivfFlat(spark, dir), Catalog.embeddings(spark, dir),
+      Catalog.ivfStore(spark, dir, IvfCodec.Flat), Catalog.embeddings(spark, dir),
       dead.toDF("doc_id"), terms, 0L, "en", 20, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // empty tombstones: bit-identical to the plain filtered hybrid
     val plain = Retrieval.rrfStoredFiltered(Catalog.lexIndex(spark, dir),
-      Catalog.docMeta(spark, dir), Catalog.ivfFlat(spark, dir),
+      Catalog.docMeta(spark, dir), Catalog.ivfStore(spark, dir, IvfCodec.Flat),
       Catalog.embeddings(spark, dir), terms, 0L, "en", 20, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(run(Nil) == plain, "empty mask must be the identity")
@@ -451,7 +453,7 @@ class RetrievalSpec extends AnyFunSuite {
     val terms = Seq("merge", "stream", "window")
     val queries = Seq(0L -> terms, 1L -> Seq("hash", "join"))
     val bdf = Retrieval.rrfStoredFilteredBatch(Catalog.lexIndex(spark, dir),
-      Catalog.docMeta(spark, dir), Catalog.ivfFlat(spark, dir),
+      Catalog.docMeta(spark, dir), Catalog.ivfStore(spark, dir, IvfCodec.Flat),
       queries.toDF("qid", "terms"),
       Catalog.embeddings(spark, dir).filter(col("vec_id") < 2),
       "en", 20, 10)
@@ -462,7 +464,7 @@ class RetrievalSpec extends AnyFunSuite {
       val slice = bdf.filter(col("qid") === qid).collect()
         .map(r => (r.getLong(1), r.getDouble(2))).toSet
       val single = Retrieval.rrfStoredFiltered(Catalog.lexIndex(spark, dir),
-        Catalog.docMeta(spark, dir), Catalog.ivfFlat(spark, dir),
+        Catalog.docMeta(spark, dir), Catalog.ivfStore(spark, dir, IvfCodec.Flat),
         Catalog.embeddings(spark, dir), ts, qid, "en", 20, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(slice == single, s"qid $qid slice diverges from single path")
@@ -523,8 +525,9 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("emb_topk_filtered: label predicate pushed, results all carry it") {
-    val df = Ann.ivfTopKFilteredFrom(Catalog.ivfFlat(spark, dir),
-      Catalog.embeddings(spark, dir), 0, 3, 10)
+    val df = IvfCodec.Flat.topK(
+      Catalog.ivfStore(spark, dir, IvfCodec.Flat).filter(col("label") === 3),
+      Catalog.embeddings(spark, dir), 0, 10)
     val labels = Catalog.embeddings(spark, dir)
       .filter(col("label") === 3).select("vec_id")
       .collect().map(_.getLong(0)).toSet

@@ -127,7 +127,7 @@ class StreamingSpec extends AnyFunSuite {
     // and cell assignment both
     val streamed = graft.streaming.EmbeddingsIngest.sq8Once(spark, dir)
       .select("vec_id", "cell", "codes")
-    val batch = Catalog.sq8IvfStore(spark, dir)
+    val batch = Catalog.ivfStore(spark, dir, graft.ml.IvfCodec.Sq8)
       .select("vec_id", "cell", "codes")
     assert(streamed.count() == batch.count())
     assert(streamed.exceptAll(batch).count() == 0)
@@ -143,7 +143,7 @@ class StreamingSpec extends AnyFunSuite {
       val compacted = graft.streaming.EmbeddingsIngest
         .compactedSq8Once(spark, dir, base)
         .select("vec_id", "cell", "codes")
-      val batch = Catalog.sq8IvfStore(spark, dir)
+      val batch = Catalog.ivfStore(spark, dir, graft.ml.IvfCodec.Sq8)
         .select("vec_id", "cell", "codes")
       assert(compacted.count() == batch.count())
       assert(compacted.exceptAll(batch).count() == 0)
@@ -157,7 +157,7 @@ class StreamingSpec extends AnyFunSuite {
     // composed PQ store exactly, code bytes and cell assignment both
     val streamed = graft.streaming.EmbeddingsIngest.pqOnce(spark, dir)
       .select("vec_id", "cell", "codes")
-    val batch = Catalog.pqIvfStore(spark, dir)
+    val batch = Catalog.ivfStore(spark, dir, graft.ml.IvfCodec.Pq)
       .select("vec_id", "cell", "codes")
     assert(streamed.count() == batch.count())
     assert(streamed.exceptAll(batch).count() == 0)
@@ -170,7 +170,7 @@ class StreamingSpec extends AnyFunSuite {
       val compacted = graft.streaming.EmbeddingsIngest
         .compactedPqOnce(spark, dir, base)
         .select("vec_id", "cell", "codes")
-      val batch = Catalog.pqIvfStore(spark, dir)
+      val batch = Catalog.ivfStore(spark, dir, graft.ml.IvfCodec.Pq)
         .select("vec_id", "cell", "codes")
       assert(compacted.count() == batch.count())
       assert(compacted.exceptAll(batch).count() == 0)

@@ -27,4 +27,17 @@ object TestSpark {
   def scansCorpusText(plan: String): Boolean =
     plan.toLowerCase.contains("documents.parquet") ||
       plan.contains("src_documents")
+
+  /** A codec's planted-regime recall rows derived from scratch: the
+    * planted cluster around vec 0 (10 variants), its cell assignment, the
+    * codec's store over it and the exact top-10, each derived in-session
+    * and cached for the statement — the in-engine twin of the stored
+    * fixtures the *_recall_planted entries read. */
+  def plantedRecall(codec: graft.ml.IvfCodec, emb: DataFrame): DataFrame = {
+    import graft.ml.Ann
+    import graft.util.Caches
+    val e = Caches.track(Ann.plantedCluster(emb, 0L, 10).cache())
+    val store = Caches.track(codec.encode(e, Ann.cellAssignment(e)).cache())
+    codec.recallFrom(store, e, Ann.exactIds(e, 0L, 10), 0L, 10)
+  }
 }
